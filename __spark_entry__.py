@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_arrow_spark.scanmeta import ensure_parallelism
+
 _REPO = os.path.dirname(os.path.abspath(__file__))
 
 # classifier_score model: deterministic weight vector shared between the
@@ -38,23 +40,6 @@ _SF_TURNS = {"0.001": 20_000, "0.01": 100_000, "0.1": 2_000_000}
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _par(df: DataFrame) -> DataFrame:
-    """Conditional scan-parallelism guard for the generated single-file
-    corpora (OTLP payloads, syslog lines): a parquet scan yields at most
-    one non-empty task per ROW GROUP, and these corpora are written as
-    one row group, so every downstream decode would run on ONE core of
-    local[N]. ensure_parallelism repartitions ONLY when the estimated
-    scan tasks are below core count (metadata probe; at real scale
-    inputs have thousands of splits and this is a no-op), moving a few
-    MB of raw payload bytes once so the from_json/regex decode work
-    parallelizes (guide §2.5 input skew: one huge unsplittable file ->
-    repartition immediately after the read). The decoders themselves
-    stay shuffle-free (plan-pinned in tests)."""
-    from otel_arrow_spark.textops.dedup import ensure_parallelism
-
-    return ensure_parallelism(df)
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,7 +1107,7 @@ def q_syslog_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_spark.sources.syslog import parse_syslog
 
     n = 2000 if "sf0.001" in sf_dir else 20_000
-    lines = _par(spark.read.parquet(_syslog_corpus_path(n)))
+    lines = ensure_parallelism(spark.read.parquet(_syslog_corpus_path(n)))
     return (
         parse_syslog(lines)
         .groupBy("format", "severity_text")
@@ -1957,7 +1942,7 @@ def q_syslog_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_spark.sources.syslog import parse_syslog
 
     n = 2000 if "sf0.001" in sf_dir else 20_000
-    lines = _par(spark.read.parquet(_syslog_corpus_path(n)))
+    lines = ensure_parallelism(spark.read.parquet(_syslog_corpus_path(n)))
     # materialize only the columns the star spec reads (guide §2.3): the
     # checkpoint is a pruning barrier, so project before it
     parsed = (
@@ -2443,7 +2428,7 @@ def q_otlp_logs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_spark.sources.otlp_json import parse_otlp_json
 
     n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_corpus_path(n)))
+    payloads = ensure_parallelism(spark.read.parquet(_otlp_corpus_path(n)))
     return parse_otlp_json(payloads).select(
         "service_name", "environment", "scope_name", "scope_version",
         "time_unix_nano", "severity_number", "severity_text", "body",
@@ -2478,7 +2463,7 @@ def q_otlp_traces_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_spark.sources.otlp_json import parse_otlp_traces_json
 
     n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_traces_corpus_path(n)))
+    payloads = ensure_parallelism(spark.read.parquet(_otlp_traces_corpus_path(n)))
     return parse_otlp_traces_json(payloads).select(
         "service_name", "scope_name", "scope_version", "trace_id",
         "span_id", "parent_span_id", "name", "kind", "start_unix_nano",
@@ -2517,7 +2502,7 @@ def q_otlp_metrics_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_spark.sources.otlp_json import parse_otlp_metrics_json
 
     n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_metrics_corpus_path(n)))
+    payloads = ensure_parallelism(spark.read.parquet(_otlp_metrics_corpus_path(n)))
     # the summary quantile snapshot compares as integer-encoded pairs
     # (pct = quantile*100, millis = round(value*1000)) so double→string
     # formatting can never diverge between engines
@@ -2806,7 +2791,7 @@ def q_otlp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_corpus_path(n)))
+    payloads = ensure_parallelism(spark.read.parquet(_otlp_corpus_path(n)))
     rt = parse_otlp_json(encode_otlp_json(parse_otlp_json(payloads)))
     return rt.select(
         "service_name", "environment", "scope_name", "scope_version",
@@ -2828,7 +2813,7 @@ def q_otlp_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_traces_corpus_path(n)))
+    payloads = ensure_parallelism(spark.read.parquet(_otlp_traces_corpus_path(n)))
     rt = parse_otlp_traces_json(
         encode_otlp_traces_json(parse_otlp_traces_json(payloads))
     )
@@ -2853,7 +2838,7 @@ def q_otlp_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n = 2000 if "sf0.001" in sf_dir else (200_000 if "sf0.1/" in sf_dir or sf_dir.endswith("sf0.1") else 20_000)
-    payloads = _par(spark.read.parquet(_otlp_metrics_corpus_path(n)))
+    payloads = ensure_parallelism(spark.read.parquet(_otlp_metrics_corpus_path(n)))
     rt = parse_otlp_metrics_json(
         encode_otlp_metrics_json(parse_otlp_metrics_json(payloads))
     )
@@ -2904,7 +2889,7 @@ def q_otlp_hist_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
     # metric_type == "histogram" anyway (branch-parity pinned in
     # tests/test_otlp_json.py)
     pts = parse_otlp_metrics_json(
-        _par(spark.read.parquet(_otlp_metrics_corpus_path(n))),
+        ensure_parallelism(spark.read.parquet(_otlp_metrics_corpus_path(n))),
         branches=("histogram",),
     )
     hist = pts.where(

@@ -52,22 +52,12 @@ def any_int(c: Column) -> Column:
     return _mk(TYPE_INT, i=c.cast("long"))
 
 
-def any_double(c: Column) -> Column:
-    return _mk(TYPE_DOUBLE, d=c.cast("double"))
-
-
 def any_bool(c: Column) -> Column:
     return _mk(TYPE_BOOL, b=c)
 
 
 def any_bytes(c: Column) -> Column:
     return _mk(TYPE_BYTES, by=c)
-
-
-def any_ser(c: Column) -> Column:
-    """Serialized (JSON) branch — maps/arrays stored as their JSON text
-    (the reference's cbor/ser branch)."""
-    return _mk(TYPE_SER, ser=c)
 
 
 def any_value_as_string(v: Column) -> Column:

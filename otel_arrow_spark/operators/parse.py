@@ -80,11 +80,6 @@ PARSED_FIELDS: list[tuple[str, T.DataType]] = [
 _PARSED_STRUCT = T.StructType([T.StructField(n, t) for n, t in PARSED_FIELDS])
 
 
-def _x(text: Column, pattern: str, group: int) -> Column:
-    """regexp_extract with empty-match → NULL (regexp_extract returns '')."""
-    return F.nullif(F.regexp_extract(text, pattern, group), F.lit(""))
-
-
 def severity_number_col(severity_text: Column) -> Column:
     """Severity text → OTel number via a literal-map lookup (JVM-side).
 

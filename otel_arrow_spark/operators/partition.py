@@ -14,13 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def partition_by_expr(df: DataFrame, expr: Column, n_partitions: int | None = None) -> DataFrame:
-    """Repartition rows so equal expression values co-locate (the shuffle
-    form of the partition processor — downstream per-partition operators
-    see complete groups)."""
-    return df.repartition(n_partitions, expr) if n_partitions else df.repartition(expr)
-
-
 def partition_with_salt(
     df: DataFrame, key: Column, n_salts: int, n_partitions: int | None = None
 ) -> DataFrame:

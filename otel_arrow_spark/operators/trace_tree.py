@@ -20,8 +20,10 @@ than returning partial depths when max_iter is hit.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _doubling_ptrs(spans: DataFrame, max_iter: int, with_sum: bool
@@ -428,100 +430,34 @@ def pagerank(
     poisons the most call flow), the eigenvector twin of the service map.
     Fixed-iteration power method so the result is a deterministic function
     of the input (no convergence threshold to disagree about); Brin & Page
-    1998 with edge weights normalised per source.
+    1998 with edge weights normalised per source, the rank of nodes with
+    no out-edges (dangling mass) spread evenly over all nodes, so total
+    rank mass stays 1.
 
-    Scale design: the iteration runs on the AGGREGATED edge table (one row
-    per service pair), never on raw spans — service_graph already reduced
-    those, and the edge table is localCheckpoint-ed ONCE up front so the
-    (possibly expensive) edge derivation never re-executes per derived
-    frame. Each round is one equi-join (rank → out-edges) plus one hash
-    aggregate on the destination; ranks are localCheckpoint-ed per round
-    so the plan stays one-round deep (same discipline as the connected-
-    components loop in textops/dedup.py). The dangling-mass term (nodes
-    with no out-edges) is a 1-row aggregate over the checkpointed ranks,
-    broadcast-cross-joined into the rank update — the whole round is ONE
-    materialization with zero driver-synchronous actions inside the loop.
-    Total rank mass is conserved at 1 by construction.
+    The input must be ``service_graph``-sized: one row per service pair,
+    never raw spans. It is collected and the power method runs on the
+    driver in numpy over the sorted rows, so the summation order (and
+    hence every float) is fixed by construction, whatever order the rows
+    arrive in. Node ids must be non-null and mutually comparable (as
+    service names are). Returns (node, rank), node typed as ``src``.
     """
-    edges = edges.select(src, dst, weight).localCheckpoint()
-    # The iteration state is |services|-sized (a service graph has at most
-    # thousands of nodes at any scale), so the 8 rounds of tiny joins/
-    # aggregates are pure scheduling overhead under the session's
-    # data-scale shuffle config. Run the loop single-partition with AQE's
-    # per-stage re-planning off (measured 1.7x on the loop, bit-identical
-    # ranks), restoring the session conf afterwards. The EDGE DERIVATION
-    # (raw-span joins) above ran under the full session config — only the
-    # node-sized state is affected.
-    spark = edges.sparkSession
-    saved = {
-        k: spark.conf.get(k)
-        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        return _pagerank_loop(edges, src, dst, weight, iterations, damping)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-
-
-def _pagerank_loop(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    weight: str,
-    iterations: int,
-    damping: float,
-) -> DataFrame:
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    outw = edges.groupBy(src).agg(F.sum(weight).alias("_outw"))
-    ep = (
-        edges.join(outw, src)
-        .select(
-            F.col(src).alias("_src"),
-            F.col(dst).alias("_dst"),
-            (F.col(weight).cast("double") / F.col("_outw")).alias("_p"),
-        )
-        .localCheckpoint()
-    )
-    has_out = outw.select(F.col(src).alias("node")).localCheckpoint()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    rows = sorted(edges.select(src, dst, weight).collect())
+    ids: dict = {}
+    s = np.array([ids.setdefault(r[0], len(ids)) for r in rows], np.int64)
+    d = np.array([ids.setdefault(r[1], len(ids)) for r in rows], np.int64)
+    w = np.array([r[2] for r in rows], np.float64)
+    n = len(ids)
+    outw = np.bincount(s, weights=w, minlength=n)
+    dangling = np.bincount(s, minlength=n) == 0
+    p = w / outw[s]
+    rank = np.full(n, 1.0 / n)
     for _ in range(iterations):
-        ranks = ranks.localCheckpoint()
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling"))
-        )
-        contrib = (
-            ep.join(ranks.withColumnRenamed("node", "_src"), "_src")
-            .groupBy("_dst")
-            .agg(F.sum(F.col("rank") * F.col("_p")).alias("_in"))
-        )
-        ranks = (
-            nodes.join(
-                contrib.withColumnRenamed("_dst", "node"), "node", "left"
-            )
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("_in", F.lit(0.0))
-                        + F.col("_dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-        )
-    # materialize the last round UNDER the loop's single-partition conf:
-    # a lazy return would execute it later under the restored session
-    # config, changing per-group accumulation order run-to-run
-    return ranks.localCheckpoint()
+        inr = np.bincount(d, weights=rank[s] * p, minlength=n)
+        rank = (1.0 - damping) / n + damping * (inr + rank[dangling].sum() / n)
+    schema = T.StructType([
+        T.StructField("node", edges.schema[src].dataType),
+        T.StructField("rank", T.DoubleType()),
+    ])
+    return edges.sparkSession.createDataFrame(
+        list(zip(ids, rank.tolist())), schema
+    )

@@ -118,9 +118,21 @@ def _committed(path: str) -> bool:
     return os.path.exists(_marker(path))
 
 
+def _replace_file(path: str, text: str) -> None:
+    """Write ``text`` to a temp file, then rename it over ``path``: a crash
+    leaves either the old file or the new one, never a torn one."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 def _commit(path: str) -> None:
-    with open(_marker(path), "w") as f:
-        f.write("ok")
+    _replace_file(_marker(path), "ok")
+
+
+def _write_manifest(path: str, manifest: dict) -> None:
+    _replace_file(path, json.dumps(manifest, indent=2, sort_keys=True))
 
 
 def run_pipeline(
@@ -133,7 +145,8 @@ def run_pipeline(
       2. per-class aggregate → {out}/agg_<cls>/
     The manifest records rows in/parsed/unparsed/routed per class plus
     wall-clock per step — the rows parsed/routed/dropped lineage of the
-    north rule.
+    north rule. The manifest is rewritten before each step's commit marker,
+    so a resumed run inherits the lineage of the steps it skips.
     """
     os.makedirs(cfg.output_dir, exist_ok=True)
     manifest_path = os.path.join(cfg.output_dir, "MANIFEST.json")
@@ -146,6 +159,7 @@ def run_pipeline(
     manifest.setdefault("timings_sec", {})
 
     routed_path = os.path.join(cfg.output_dir, "routed")
+    manifest["sinks"]["routed"] = routed_path
     routed = build_routed(spark, cfg)
 
     # Step 1: routed-rows sink, one pass, observe() counters ride along.
@@ -172,8 +186,8 @@ def run_pipeline(
         m["rows_unparsed"] = m["rows_in"] - m["rows_parsed"]
         manifest["metrics"].update(m)
         manifest["timings_sec"]["routed_write"] = round(time.monotonic() - t0, 3)
+        _write_manifest(manifest_path, manifest)
         _commit(routed_path)
-    manifest["sinks"]["routed"] = routed_path
 
     # Step 2: per-sink aggregates in ONE job — groupBy includes the route
     # key, output is partitioned by it, so "agg table per sink" is a
@@ -192,6 +206,7 @@ def run_pipeline(
         )
         agg.write.mode("overwrite").partitionBy("signal_class").parquet(agg_root)
         manifest["timings_sec"]["agg_write"] = round(time.monotonic() - t0, 3)
+        _write_manifest(manifest_path, manifest)
         _commit(agg_root)
     for cls in SIGNAL_CLASSES:
         manifest["sinks"][f"agg_{cls}"] = os.path.join(agg_root, f"signal_class={cls}")
@@ -211,7 +226,6 @@ def run_pipeline(
             }
     manifest["sinks_detail"] = detail
 
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
+    _write_manifest(manifest_path, manifest)
     manifest["manifest_path"] = manifest_path
     return PipelineResult(manifest=manifest)

@@ -1,6 +1,6 @@
 """Metadata-only probes over a DataFrame's file scan.
 
-Shared by the partition-sizing helpers (textops.dedup.ensure_parallelism,
+Shared by the partition-sizing helpers (``ensure_parallelism`` below,
 textops.multimodal.media_repartition): everything here reads file-system
 metadata and parquet footers only — no Spark job, no plan-to-RDD
 conversion. Remote schemes (s3a/hdfs/abfs/…) stat through the session's
@@ -93,3 +93,27 @@ def estimated_scan_tasks(df: DataFrame, parallelism: int) -> int | None:
         if row_groups >= byte_splits:
             return byte_splits
     return min(byte_splits, row_groups)
+
+
+def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+    """Repartition ONLY when the input's scan parallelism is below core count.
+
+    Compute-heavy per-row operators (shingling, 64-hash signatures, the
+    OTLP/syslog decoders over single-row-group generated corpora) are
+    CPU-bound: a corpus arriving as one small file / one row group would
+    otherwise run on a single task. At real scale inputs already have
+    thousands of splits and this is a no-op; the condition (not a blind
+    repartition) is what keeps it from adding a full-corpus shuffle there.
+
+    The probe is metadata-only (no plan-to-RDD conversion, no job):
+    :func:`estimated_scan_tasks` replays Spark's own split sizing
+    (maxSplitBytes + FilePartition packing) capped by parquet row-group
+    counts — a parquet scan yields at most one non-empty task per row
+    group regardless of byte splits. In-memory relations are left alone
+    (they already parallelize).
+    """
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    est = estimated_scan_tasks(df, target)
+    if est is None or est >= target:
+        return df
+    return df.repartition(target)

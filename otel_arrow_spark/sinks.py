@@ -1,4 +1,4 @@
-"""Sinks: table-format-aware writers, console/debug sink, retry policy.
+"""Sinks: table-format-aware writers, console sink, retry policy.
 
 Reference analogs:
 
@@ -301,21 +301,6 @@ def error_sink(df: DataFrame) -> None:
     """Always-fail terminal (error_exporter analog, exporters/
     error_exporter/mod.rs:1): for exercising retry/failover paths."""
     raise IOError("error_sink: configured to always fail")
-
-
-def debug_sink(
-    df: DataFrame,
-    fraction: float = 0.01,
-    n: int = 20,
-    predicate=None,
-    seed: int = 42,
-) -> int:
-    """Sampled, filtered pretty-print of passing rows (debug processor
-    analog, processors/debug_processor/{mod,predicate,sampling}.rs):
-    returns the number of rows that passed the predicate (pre-sampling)."""
-    base = df.filter(predicate) if predicate is not None else df
-    base.sample(fraction=fraction, seed=seed).show(n, truncate=False)
-    return base.count()
 
 
 def kafka_options(

@@ -165,7 +165,7 @@ def bloom_pruned_scan(
     # build_bloom_manifest frame the build scan would otherwise execute
     # once per reference (guide §1.2)
     zm = zm.localCheckpoint()
-    # ONE aggregate job yields the sketch parameters, the row-count gate
+    # ONE aggregate job yields the sketch parameters, the emptiness check
     # and files_total — replacing three separate driver actions (head +
     # count + distinct-count); at planning sizes the per-job round-trip
     # IS the cost (guide §1.2)
@@ -196,31 +196,8 @@ def bloom_pruned_scan(
         .select("file")
         .distinct()
     )
-    # the admit computation runs over PLANNING METADATA (files × words
-    # rows + k·|values| probe rows) — under the session's data-scale
-    # shuffle config its three tiny stages are pure scheduler overhead
-    # (measured ~1 s of a 2 s query); run it single-partition with AQE
-    # off when the manifest is metadata-sized, like the pagerank/CC
-    # loops (integer counts — partitioning-invariant by construction)
-    saved = None
-    if head.n_rows <= 1_000_000:
-        saved = {
-            kk: spark.conf.get(kk)
-            for kk in (
-                "spark.sql.adaptive.enabled",
-                "spark.sql.shuffle.partitions",
-            )
-        }
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        files = [r.file for r in keep.collect()]
-        total = head.n_files
-    finally:
-        if saved is not None:
-            for kk, v in saved.items():
-                spark.conf.set(kk, v)
-    stats = {"files_total": total, "files_read": len(files)}
+    files = [r.file for r in keep.collect()]
+    stats = {"files_total": head.n_files, "files_read": len(files)}
     if not files:
         schema = spark.read.parquet(path).schema
         return spark.createDataFrame([], schema).filter(

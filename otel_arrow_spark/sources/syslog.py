@@ -95,6 +95,11 @@ def parse_syslog(df: DataFrame, text_col: str = "line") -> DataFrame:
 
     Detection order mirrors parser/mod.rs:46-104: RFC5424 → CEF → RFC3164 →
     unknown (all-null fields, format='unknown', row kept).
+
+    An RFC5424 line with no MSG part (header and structured data only)
+    yields ``message == ''``, not null: the MSG group is the one header
+    group that can legitimately match empty, so its absence is not mapped
+    back to null. The DuckDB oracles replay exactly this.
     """
     import pandas as pd
     import pyarrow as pa

@@ -20,30 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition ONLY when the input's scan parallelism is below core count.
-
-    Compute-heavy per-row operators (shingling, 64-hash signatures) are
-    CPU-bound: a corpus arriving as one small file / one row group would
-    otherwise run on a single task. At real scale inputs already have
-    thousands of splits and this is a no-op; the condition (not a blind
-    repartition) is what keeps it from adding a full-corpus shuffle there.
-
-    The probe is metadata-only (no plan-to-RDD conversion, no job):
-    ``scanmeta.estimated_scan_tasks`` replays Spark's own split sizing
-    (maxSplitBytes + FilePartition packing) capped by parquet row-group
-    counts — a parquet scan yields at most one non-empty task per row
-    group regardless of byte splits. In-memory relations are left alone
-    (they already parallelize).
-    """
-    from otel_arrow_spark.scanmeta import estimated_scan_tasks
-
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    est = estimated_scan_tasks(df, target)
-    if est is None or est >= target:
-        return df
-    return df.repartition(target)
+from otel_arrow_spark.scanmeta import ensure_parallelism
 
 
 # --- exact ------------------------------------------------------------------
@@ -832,10 +809,12 @@ def connected_components(
     (lowest-id) representative — the step a dedup pipeline runs after pair
     generation to collapse A~B, B~C into one {A,B,C} cluster.
 
-    Scale shape: each round is one shuffle join of the (long, long) edge
-    list against the label table plus two hash aggregates; labels are
-    ``localCheckpoint``-ed per round so the plan never grows with the
-    iteration count; convergence is a bounded count per round. Simple
+    Scale shape: the first round needs no join (a vertex's own id and its
+    neighbours' ids are all on its edge rows: one aggregate); each later
+    round is one shuffle join of the edge list against the label table
+    plus one hash aggregate over the union of own and neighbour labels;
+    labels are ``localCheckpoint``-ed per round so the plan never grows
+    with the iteration count; ``max_iter`` bounds the join rounds. Simple
     propagation needs O(component diameter) rounds — near-dup clusters
     are small and dense (template families), so 3-5 rounds in practice;
     for graphs with long chains swap in alternating large-star/small-star
@@ -852,64 +831,30 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    # Near-dup graphs are usually tiny relative to the corpus (template
-    # families): when the materialized edge list is small, the per-round
-    # joins/aggregates are pure scheduler overhead under the session's
-    # data-scale shuffle config — run the loop single-partition with
-    # AQE's per-stage re-planning off (same reasoning as the pagerank
-    # loop; min-label propagation is integer min/least, so the result is
-    # partitioning-invariant by construction). Large graphs keep the
-    # session config. Conf is restored afterwards; the loop's outputs
-    # are checkpointed inside it, so nothing lazy escapes the override.
-    spark = edges.sparkSession
-    if edges.count() <= 1_000_000:
-        saved = {
-            k: spark.conf.get(k)
-            for k in (
-                "spark.sql.adaptive.enabled",
-                "spark.sql.shuffle.partitions",
-            )
-        }
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        try:
-            return _cc_loop(edges, max_iter)
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
-    return _cc_loop(edges, max_iter)
-
-
-def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
-    labels = edges.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("comp")
+    labels = edges.groupBy(F.col("src").alias("id")).agg(
+        F.min(F.least("src", "dst")).alias("comp")
     )
-    def propagate(lbl: DataFrame) -> DataFrame:
-        """One min-label step; carries the incoming label as ``old`` so
-        the convergence check below is a join-free filter over the
-        checkpointed output (labels only ever decrease)."""
-        nbr = (
-            edges.join(lbl, edges.src == lbl.id)
-            .groupBy("dst")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        return lbl.join(nbr, lbl.id == nbr.dst, "left").select(
-            lbl.id.alias("id"),
-            F.least(F.col("comp"), F.coalesce("nmin", F.col("comp"))).alias("comp"),
-            lbl.comp.alias("old"),
-        )
-
-    # one propagation per round, convergence checked every round: the
-    # check costs one tiny job over the just-checkpointed labels (no
-    # shuffle, no join — the old label rides along) and short-circuits on
-    # the FIRST changed row (isEmpty scans partitions incrementally;
-    # a full count() per round was the prior version's overhead), so for
-    # the common fast-converging template-family graphs total work is the
-    # minimum diameter+1 propagations (batching two steps per check was
-    # measured 1.7x slower here: it always pays 2x propagations per check)
+    # each round keeps the incoming label as ``old`` (the own-label row is
+    # flagged in the union) so the convergence check is a join-free filter
+    # over the checkpointed output (labels only ever decrease) that stops
+    # at the FIRST changed row (isEmpty scans partitions incrementally;
+    # batching two steps per check was measured 1.7x slower: it always
+    # pays 2x propagations per check)
     converged = False
     for _ in range(max_iter):
-        new = propagate(labels).localCheckpoint()
+        nbr = edges.join(labels, edges.src == labels.id).select(
+            F.col("dst").alias("id"), "comp", F.lit(False).alias("own")
+        )
+        new = (
+            labels.select("id", "comp", F.lit(True).alias("own"))
+            .unionByName(nbr)
+            .groupBy("id")
+            .agg(
+                F.min("comp").alias("comp"),
+                F.min(F.when(F.col("own"), F.col("comp"))).alias("old"),
+            )
+            .localCheckpoint()
+        )
         converged = new.where(F.col("comp") < F.col("old")).isEmpty()
         labels = new.select("id", "comp")
         if converged:
@@ -919,7 +864,7 @@ def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
         # dedup_cluster_representatives as fake "representatives"
         raise RuntimeError(
             f"connected_components did not converge within {max_iter} "
-            "propagation steps (component diameter exceeds the budget); "
+            "join rounds (component diameter exceeds the budget); "
             "raise max_iter or use an alternating large-star/small-star "
             "variant for long-chain graphs"
         )

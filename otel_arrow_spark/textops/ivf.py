@@ -23,7 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from otel_arrow_spark.textops.dedup import cosine_expr, ensure_parallelism
+from otel_arrow_spark.scanmeta import ensure_parallelism
+from otel_arrow_spark.textops.dedup import cosine_expr
 
 
 def train_centroids(

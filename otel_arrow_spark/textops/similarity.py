@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from otel_arrow_spark.textops.dedup import cosine_expr, ensure_parallelism
+from otel_arrow_spark.scanmeta import ensure_parallelism
+from otel_arrow_spark.textops.dedup import cosine_expr
 
 cosine_similarity_col = cosine_expr  # public alias
 

@@ -109,6 +109,30 @@ def test_resume_skips_committed_steps(spark, tiny_transcripts, workdir):
     assert after_span > 0
 
 
+def test_resume_after_crash_keeps_lineage(spark, tiny_transcripts, workdir,
+                                          monkeypatch, result):
+    # a crash in step 2 must not lose step 1's lineage: the resumed run
+    # skips the committed routed write yet reports the clean run's metrics
+    import otel_arrow_spark.plans.pipeline as pipeline_mod
+
+    def boom(*a, **k):
+        raise RuntimeError("injected step-2 failure")
+
+    cfg = PipelineConfig(input_path=tiny_transcripts,
+                         output_dir=f"{workdir}/out_crash")
+    monkeypatch.setattr(pipeline_mod, "sink_aggregate", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, cfg)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(cfg.output_dir, "agg", "_COMMITTED"))
+    r = run_pipeline(spark, cfg, resume=True)
+    assert r.manifest["metrics"] == result.manifest["metrics"]
+    rows = {c: d["rows"] for c, d in r.manifest["sinks_detail"].items()}
+    assert rows == {c: d["rows"]
+                    for c, d in result.manifest["sinks_detail"].items()}
+    assert not [f for f in os.listdir(cfg.output_dir) if f.endswith(".tmp")]
+
+
 def test_salted_aggregate_equals_naive_on_skewed_data(spark, result):
     routed = spark.read.parquet(result.routed_path)
     # skew fixture: the hot conversation must dominate (FIXTURES.md §6)

@@ -349,16 +349,34 @@ class TestPagerank:
                     for v in nodes}
         return rank
 
+    @staticmethod
+    def _seeded_edges(n_nodes=60, seed=7):
+        """~60 services: the last 15 only receive calls (dangling), and
+        some (client, server) pairs repeat with their own weights."""
+        import random
+
+        rng = random.Random(seed)
+        names = [f"svc{i:02d}" for i in range(n_nodes)]
+        callers = names[:45]
+        edges = [(rng.choice(callers), v, rng.randint(1, 50))
+                 for v in names[45:]]
+        edges += [(a, b, rng.randint(1, 50))
+                  for a in callers
+                  for b in rng.sample(names, 3) if b != a]
+        edges += [(a, b, rng.randint(1, 50)) for a, b, _ in edges[::7]]
+        return edges
+
     def test_matches_python_replay(self, spark):
         from otel_arrow_spark.operators.trace_tree import pagerank
 
-        df = spark.createDataFrame(
-            self.EDGES, "client string, server string, n_calls long")
-        got = {r.node: r.rank for r in pagerank(df).collect()}
-        exp = self._replay(self.EDGES)
-        assert set(got) == set(exp)
-        for v in exp:
-            assert got[v] == pytest.approx(exp[v], rel=1e-9), v
+        for edges in (self.EDGES, self._seeded_edges()):
+            df = spark.createDataFrame(
+                edges, "client string, server string, n_calls long")
+            got = {r.node: r.rank for r in pagerank(df).collect()}
+            exp = self._replay(edges)
+            assert set(got) == set(exp)
+            for v in exp:
+                assert got[v] == pytest.approx(exp[v], rel=1e-9), v
 
     def test_mass_conserved_and_ordering(self, spark):
         from otel_arrow_spark.operators.trace_tree import pagerank

@@ -12,6 +12,7 @@ def parsed_cases(spark):
     cases = [
         ("r54", "<165>1 2026-01-02T03:04:05Z web01 nginx 812 ID7 - GET /index"),
         ("r54sd", '<34>1 2026-01-02T03:04:05Z db01 pg 1 ID8 [ex@32473 k="v"] started'),
+        ("r54nomsg", "<165>1 2026-01-02T03:04:05Z web01 nginx 812 ID7 -"),
         ("r31", "<13>Feb  5 10:11:12 mail01 postfix[4242]: queue active"),
         ("cef", "CEF:0|SecCorp|IDS|1.0|SIG9|Port scan|7|src=10.0.0.5 dst=10.0.1.9 act=blocked"),
         ("cef_sys", "<13>Feb  5 10:11:12 gw01 CEF:0|V|P|1|S|N|3|src=1.2.3.4"),
@@ -37,6 +38,14 @@ def test_rfc5424_structured_data(parsed_cases):
     r = parsed_cases["r54sd"]
     assert r.structured_data == '[ex@32473 k="v"]'
     assert r.message == "started"
+
+
+def test_rfc5424_without_msg_is_empty_string(parsed_cases):
+    # absent MSG → '' (not null), the behaviour the DuckDB oracle replays
+    r = parsed_cases["r54nomsg"]
+    assert r.format == "rfc5424" and r.hostname == "web01"
+    assert r.message == ""
+    assert r.structured_data is None
 
 
 def test_rfc3164(parsed_cases):

@@ -527,7 +527,7 @@ class TestMultimodal:
         """ensure_parallelism must widen a single-row-group file to core
         count without any plan-to-RDD probe, and leave in-memory relations
         untouched."""
-        from otel_arrow_spark.textops.dedup import ensure_parallelism
+        from otel_arrow_spark.scanmeta import ensure_parallelism
 
         path = f"{workdir}/one_rg"
         spark.createDataFrame(
@@ -546,7 +546,7 @@ class TestMultimodal:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from otel_arrow_spark.textops.dedup import ensure_parallelism
+        from otel_arrow_spark.scanmeta import ensure_parallelism
 
         path = f"{workdir}/many_rg/part.parquet"
         import os

@@ -3,13 +3,15 @@ entry and its oracle_sql() side-by-side at a given sf, compare row count,
 column names, and an order-insensitive value hash.
 
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
-(with query names given, only those entries are checked)
+(with query names given, only those entries are checked). Spark runs on
+local[$SPARK_GRAFT_CPUS] (default 8), like bench.py and bench_extra.py.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
@@ -49,7 +51,8 @@ def value_hash(rows, colnames):
 def main(sf_dir: str, only: list[str] | None = None) -> int:
     from otel_arrow_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark(master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
